@@ -59,15 +59,22 @@ def descendants(root: int) -> list[int]:
     return out
 
 
+def is_jvm(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip() == "java"
+    except OSError:  # the process exited
+        return False
+
+
 def resident_bytes(pid: int) -> int:
     """Resident memory of ``pid`` with shared pages counted once across
     processes: the proportional set size, except for the JVM, whose pages
     are its own (its RSS is read instead, as PSS walks its whole heap)."""
     try:
-        with open(f"/proc/{pid}/comm") as f:
-            if f.read().strip() == "java":
-                with open(f"/proc/{pid}/statm") as g:
-                    return int(g.read().split()[1]) * _PAGE
+        if is_jvm(pid):
+            with open(f"/proc/{pid}/statm") as g:
+                return int(g.read().split()[1]) * _PAGE
         with open(f"/proc/{pid}/smaps_rollup") as f:
             for line in f:
                 if line.startswith("Pss:"):
@@ -86,14 +93,23 @@ class RssSampler:
     def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
         self.peak = 0
+        self.peak_parts: dict[str, int] = {}  # JVM / Python split at peak
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         me = os.getpid()
         while not self._stop.is_set():
-            total = sum(resident_bytes(p) for p in [me, *descendants(me)])
-            self.peak = max(self.peak, total)
+            parts = {"jvm": 0, "python": 0, "python_procs": 0}
+            for pid in [me, *descendants(me)]:
+                if is_jvm(pid):
+                    parts["jvm"] += resident_bytes(pid)
+                else:
+                    parts["python"] += resident_bytes(pid)
+                    parts["python_procs"] += 1
+            total = parts["jvm"] + parts["python"]
+            if total > self.peak:
+                self.peak, self.peak_parts = total, parts
             self._stop.wait(self.interval_s)
 
     def start(self) -> None:

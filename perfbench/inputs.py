@@ -19,7 +19,7 @@ import time
 
 import numpy as np
 
-FORMAT = 1  # bump when generation changes, to invalidate old caches
+FORMAT = 3  # bump when generation changes, to invalidate old caches
 
 # Bulk backfill: the sf-scaled shape of bench.py (Zipf 1.2 keys, 10%
 # rollbacks, three schema changes in the first 3% of the log), sized so two
@@ -111,16 +111,29 @@ def _build_bulk(out: str, seed: int, scale: str) -> dict:
 
 
 def _build_tail(out: str, seed: int, scale: str, n_files: int) -> dict:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from logicaldecoding_spark.generator import generate_log, split_log_dir
     from logicaldecoding_spark.sources.proto import convert_log_to_proto
 
-    n_txns = TAIL_TXNS_PER_FILE[scale] * (TAIL_WARM_FILES + n_files)
+    want = TAIL_WARM_FILES + n_files
     json_log = os.path.join(out, "twin.json.parquet")
-    stats = generate_log(json_log, seed=seed, **log_shape(n_txns))
+    stats = generate_log(json_log, seed=seed,
+                         **log_shape(TAIL_TXNS_PER_FILE[scale] * want))
     proto_log = os.path.join(out, "proto.parquet")
     convert_log_to_proto(json_log, proto_log)
-    files = split_log_dir(proto_log, os.path.join(out, "files"),
-                          TAIL_WARM_FILES + n_files)
+    files = split_log_dir(proto_log, os.path.join(out, "files"), want)
+    # split_log_dir leaves the few transactions past its last even cut in a
+    # short file of their own; fold them into the file before, so that no
+    # micro-batch is spent on them alone
+    if len(files) > want:
+        pq.write_table(pa.concat_tables([pq.read_table(p)
+                                         for p in files[want - 1:]]),
+                       files[want - 1])
+        for p in files[want:]:
+            os.remove(p)
+        files = files[:want]
     with open(os.path.join(out, "oracle.json"), "w") as f:
         json.dump(_oracle_rows(json_log), f)
     summary = [_file_summary(p) for p in files]

@@ -5,7 +5,9 @@ Run from the root of a checkout:  python3 -m pytest perfbench -q
 * every workload prints every end-to-end metric untraced and every
   per-layer metric traced, with a correct, failure-free result;
 * the oracle gate passes on a replayed table and fails on a copy of it with
-  one row corrupted.
+  one row corrupted;
+* the self-time check fails when the named layers leave more than 10% of a
+  replay's wall time unattributed.
 """
 
 from __future__ import annotations
@@ -99,3 +101,28 @@ def test_percentile_and_sql_metric_parsing():
         "total (min, med, max (stageId: taskId))\n380.1 KiB (1.0 KiB, "
         "2.0 KiB, 3.0 KiB (stage 3.0: task 5))") == pytest.approx(
             380.1 * 1024)
+
+
+def test_self_time_check_fails_on_unattributed_time():
+    from tracing import Span
+
+    def replay_with(child: str, child_wall: float) -> list:
+        root = Span("plans.replay.replay", 1, None, "measure", 0.0, 10.0)
+        kid = Span(child, 2, root, "measure", 1.0, 1.0 + child_wall)
+        grandkid = Span("table.format.commit_data", 3, kid, "measure",
+                        1.0, 1.5)
+        kid.child_s = grandkid.wall_s
+        root.child_s = kid.wall_s
+        return [grandkid, kid, root]
+
+    check = run.self_time_check
+    ok = check(replay_with("plans.replay.apply_plans", 9.5),
+               "plans.replay.replay")
+    assert ok["ok"] and ok["covered_s"] == pytest.approx(9.5)
+    # half the replay's wall time is outside every named layer
+    assert not check(replay_with("plans.replay.apply_plans", 5.0),
+                     "plans.replay.replay")["ok"]
+    # a span that is not a named layer covers nothing of its own
+    assert not check(replay_with("bench.other", 9.5),
+                     "plans.replay.replay")["ok"]
+    assert check([], "plans.replay.replay")["ok"] is None

@@ -2,7 +2,7 @@
 
 ``bulk_json``: a one-shot backfill of a JSON-payload log into a fresh
 64-bucket copy-on-write table with ``replay()`` defaults, repeated for the
-measured window, with open-loop point lookups against the latest finished
+measured window, then open-loop point lookups against the last finished
 table.  ``tail_proto_mor``: the protobuf twin of a smaller log, split at
 transaction boundaries and dropped into a watched directory on a fixed
 open-loop schedule while ``stream_replay`` applies it merge-on-read, with
@@ -27,13 +27,17 @@ import inputs
 import tracing
 
 # Open-loop rates, about half of what the seed sustains on a 4-core host.
-# A tail micro-batch takes ~10 s and at most 16 files (~1.5 files/s); the
-# tail drops one file every 1.2 s.  The window's last file is due before the
-# first measured batch ends, so every file is applied by the first or the
-# second measured batch.  One lookup thread sustains ~75 retrieves/s on the
-# merge-on-read table (~13 ms each).
-TAIL_FILE_INTERVAL_S = 1.2
+# Closed loop (``run.py --workload tail_proto_mor --tail-interval 0
+# --tail-files 32``: 33 files dropped at once, applied 16 per micro-batch,
+# lookups beside) the seed drained 0.99 and 0.95 files/s on seeds 1 and 2,
+# ~1.0 s per file, so the tail drops one file every 2.0 s.  A micro-batch
+# costs ~10-15 s whether it takes 2 files or 16, so a 12 s window of 6
+# files is applied in two batches (the first file, then the rest).  One
+# lookup thread sustains ~100 retrieves/s (p50 ~10 ms on either table); it
+# is offered 40/s.
+TAIL_FILE_INTERVAL_S = 2.0
 LOOKUPS_PER_S = 40.0
+BULK_LOOKUP_S = 3.0  # the bulk's lookup window, after its replays
 # Delta files per bucket slot before the tail compacts that slot: low
 # enough that compaction runs inside one measured window.
 TAIL_AUTO_COMPACT_DELTAS = 2
@@ -80,6 +84,10 @@ class Context:
         self.seed = seed
         self.seconds = seconds
         self.scale = scale
+        # the tail's drop schedule; calibration drops a fixed number of
+        # files all at once (interval 0) to measure the sustained rate
+        self.tail_interval_s = TAIL_FILE_INTERVAL_S
+        self.tail_files: int | None = None
         self.t_start = time.monotonic()
         base = os.path.join(root, ".perfbench")
         self.cache = os.path.join(base, "cache")
@@ -287,19 +295,22 @@ def run_bulk(ctx: Context, spark_box: dict) -> dict:
     traced: list[bool] = []
     window = host.window_start()
     start = time.perf_counter()
+    while len(walls) < 2 or time.perf_counter() - start < ctx.seconds:
+        # traced runs alternate untraced and traced replays: the
+        # difference is the tracing overhead
+        on = ctx.tracer is not None and len(walls) % 2 == 1
+        if ctx.tracer is not None and not on:
+            with ctx.tracer.untraced():
+                walls.append(replay_into(len(tables)))
+        else:
+            walls.append(replay_into(len(tables)))
+        traced.append(on)
+    measure_s = time.perf_counter() - start
+    # point reads of the finished backfill, after the timed replays so
+    # that they do not compete with them
     with LookupLoad(ctx, spark, meta["keys"], LOOKUPS_PER_S,
                     lambda: tables[-1]) as lookups:
-        while len(walls) < 2 or time.perf_counter() - start < ctx.seconds:
-            # traced runs alternate untraced and traced replays: the
-            # difference is the tracing overhead
-            on = ctx.tracer is not None and len(walls) % 2 == 1
-            if ctx.tracer is not None and not on:
-                with ctx.tracer.untraced():
-                    walls.append(replay_into(len(tables)))
-            else:
-                walls.append(replay_into(len(tables)))
-            traced.append(on)
-    measure_s = time.perf_counter() - start
+        time.sleep(BULK_LOOKUP_S)
     diag = {"replay_walls_s": walls, "measure_s": measure_s,
             "events": events, **host.window_stats(window)}
     ctx.set_phase("check")
@@ -320,7 +331,9 @@ def run_bulk(ctx: Context, spark_box: dict) -> dict:
     return {
         "replay_events_per_s": events / statistics.median(walls),
         "setup_s": setup_s,
-        # the whole log is one file that is due when the backfill starts
+        # every end-to-end metric is reported on every workload; here the
+        # whole log is one file, due when its backfill starts, so the lag
+        # is the replay wall time (the inverse of replay_events_per_s)
         "tail_lag_p50_s": percentile(walls, 50),
         "tail_lag_p90_s": percentile(walls, 90),
         "lookup_p50_ms": percentile(lookups.latency_s, 50) * 1e3,
@@ -348,7 +361,8 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
     from logicaldecoding_spark.table.format import LakeTable
 
     stream_mod = import_module("logicaldecoding_spark.streaming.stream_replay")
-    n_measured = max(2, math.floor(ctx.seconds / TAIL_FILE_INTERVAL_S))
+    interval = ctx.tail_interval_s
+    n_measured = ctx.tail_files or max(2, math.floor(ctx.seconds / interval))
     meta = inputs.prepare(ctx.cache, "tail", ctx.seed, ctx.scale, n_measured)
     # fresh copies of the split files, with increasing mtimes in file order
     # (the file source orders new files by modification time)
@@ -411,7 +425,7 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
     now = time.time()
     wait = (math.floor(now / TRIGGER_S) + 1) * TRIGGER_S + 0.25 - now
     start = time.perf_counter() + wait
-    due = [start + i * TAIL_FILE_INTERVAL_S for i in range(len(measured))]
+    due = [start + i * interval for i in range(len(measured))]
     dropped_at: list[float] = []
     window = host.window_start()
 
@@ -441,7 +455,7 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
     query.stop()
     spark_box.pop("query", None)
 
-    lags = []
+    lags, last_applied = [], start
     for i, d in enumerate(due):
         t_applied = next((t for t, lsn, _e in commits
                           if lsn >= last_lsn[n_warm + i]), None)
@@ -449,12 +463,19 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
                        f"file {i} not applied: {error}")
         if t_applied is not None:
             lags.append(t_applied - d)
+            last_applied = max(last_applied, t_applied)
     ctx.set_phase("check")
     oracle = inputs.load_oracle(meta)
     check_table(ctx, spark, table, oracle)
     check_lookups(ctx, spark, table, meta["keys"], oracle)
 
     events = sum(meta["file_data_events"][n_warm:])
+    batches = _measured_batches(progress, warm_batch)
+    # the program's own apply time: foreachBatch wall of the measured
+    # batches (the drop schedule and the trigger's idle ticks left out)
+    add_batch_s = sum(p["durationMs"].get("addBatch", 0)
+                      for p in batches) / 1e3
+    drain_s = last_applied - start
     if ctx.tracer is not None:
         ctx.layer["bench.gen_late_s"] = max(
             lookups.late_s, *(a - d for a, d in zip(dropped_at, due)))
@@ -469,12 +490,16 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
                        last_lsn[n_warm:],
                        os.path.join(ctx.work, "checkpoint"))
     return {
-        "replay_events_per_s": events / measure_s if drained else 0.0,
+        "replay_events_per_s": (events / add_batch_s
+                                if drained and add_batch_s > 0 else 0.0),
         "setup_s": setup_s,
         "tail_lag_p50_s": percentile(lags, 50),
         "tail_lag_p90_s": percentile(lags, 90),
         "lookup_p50_ms": percentile(lookups.latency_s, 50) * 1e3,
         "_diag": {"lags_s": lags, "measure_s": measure_s, "events": events,
+                  "add_batch_s": add_batch_s, "drain_s": drain_s,
+                  # with every file due at once: the sustained rate
+                  "applied_files_per_s": len(lags) / drain_s if lags else 0.0,
                   "commits_s": [t - start for t, _lsn, _e in commits],
                   "batches": [(p["batchId"], p["numInputRows"],
                                p["durationMs"].get("triggerExecution"))
@@ -483,11 +508,15 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
     }
 
 
+def _measured_batches(progress: list, warm_batch: int) -> list:
+    return [p for p in progress
+            if p["batchId"] > warm_batch and p["numInputRows"] > 0]
+
+
 def _stream_layers(ctx: Context, progress: list, warm_batch: int,
                    due: list[float], commits: list, last_lsn: list[int],
                    checkpoint: str) -> None:
-    batches = [p for p in progress
-               if p["batchId"] > warm_batch and p["numInputRows"] > 0]
+    batches = _measured_batches(progress, warm_batch)
     n = max(1, len(batches))
     files = 0
     for p in batches:
