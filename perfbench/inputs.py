@@ -2,7 +2,9 @@
 
 One ``--seed`` drives every input of a workload: the captured log (JSON
 payload wire for the backfill, its protobuf twin split into tail files for
-the live tail), the lookup key stream and the oracle's expected state.
+the live tail), the lookup key stream and the backfill oracle's expected
+state.  How many tail files a run drops depends on when its batches commit,
+so the tail's oracle is replayed from the dropped files after the run.
 Inputs are built once per (shape, seed) into ``<cache>/<kind>-<hash>/``,
 written to a temporary directory and renamed into place when complete, and
 fsynced so no dirty page of a fresh input is flushed during a timed region.
@@ -19,15 +21,20 @@ import time
 
 import numpy as np
 
-FORMAT = 3  # bump when generation changes, to invalidate old caches
+FORMAT = 5  # bump when generation changes, to invalidate old caches
 
 # Bulk backfill: the sf-scaled shape of bench.py (Zipf 1.2 keys, 10%
-# rollbacks, three schema changes in the first 3% of the log), sized so two
-# warm-up replays and two measured ones fit one run of the time budget.
-BULK_TXNS = {"full": 20_000, "toy": 600}
-# Live tail: files of TAIL_TXNS_PER_FILE transactions, cut at transaction
-# boundaries; the first TAIL_WARM_FILES are applied during set-up.
-TAIL_TXNS_PER_FILE = {"full": 1_000, "toy": 100}
+# rollbacks, three schema changes in the first 3% of the log), sized so
+# the cold replay and at least three measured ones (~5 s each) fit one run
+# of the time budget: a run's median then comes from several replays.
+BULK_TXNS = {"full": 5_000, "toy": 600}
+# Live tail: files of TAIL_TXNS_PER_FILE transactions (~400 data events),
+# cut at transaction boundaries; the first TAIL_WARM_FILES are applied
+# during set-up.  A micro-batch costs ~8-16 s almost whatever it takes, so
+# many small files per batch keep the batches' make-up, and with it each
+# file's lag, from jumping when one file lands on either side of a batch
+# boundary.
+TAIL_TXNS_PER_FILE = {"full": 80, "toy": 40}
 TAIL_WARM_FILES = 2
 LOOKUP_KEYS = 4_000
 
@@ -134,8 +141,6 @@ def _build_tail(out: str, seed: int, scale: str, n_files: int) -> dict:
         for p in files[want:]:
             os.remove(p)
         files = files[:want]
-    with open(os.path.join(out, "oracle.json"), "w") as f:
-        json.dump(_oracle_rows(json_log), f)
     summary = [_file_summary(p) for p in files]
     meta = {
         "files": [os.path.relpath(p, out) for p in files],

@@ -2,7 +2,7 @@
 
 Usage, from the root of a checkout:
 
-    python3 perfbench/run.py --workload bulk_json --seed 1 --seconds 12 \\
+    python3 perfbench/run.py --workload bulk_json --seed 1 --seconds 5 \\
         --trace 0
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the same

@@ -6,9 +6,10 @@ measured window, then open-loop point lookups against the last finished
 table.  ``tail_proto_mor``: the protobuf twin of a smaller log, split at
 transaction boundaries and dropped into a watched directory on a fixed
 open-loop schedule while ``stream_replay`` applies it merge-on-read, with
-open-loop point lookups against the live table.  Every table a run builds
-is checked row for row (lineage and content sha256 included) against the
-sequential oracle after the timed window.
+open-loop point lookups against the live table; the drops go on for at
+least the window and until the first measured micro-batch has committed.
+Every table a run builds is checked row for row (lineage and content
+sha256 included) against the sequential oracle after the timed window.
 """
 
 from __future__ import annotations
@@ -28,16 +29,25 @@ import tracing
 
 # Open-loop rates, about half of what the seed sustains on a 4-core host.
 # Closed loop (``run.py --workload tail_proto_mor --tail-interval 0
-# --tail-files 32``: 33 files dropped at once, applied 16 per micro-batch,
-# lookups beside) the seed drained 0.99 and 0.95 files/s on seeds 1 and 2,
-# ~1.0 s per file, so the tail drops one file every 2.0 s.  A micro-batch
-# costs ~10-15 s whether it takes 2 files or 16, so a 12 s window of 6
-# files is applied in two batches (the first file, then the rest).  One
-# lookup thread sustains ~100 retrieves/s (p50 ~10 ms on either table); it
-# is offered 40/s.
-TAIL_FILE_INTERVAL_S = 2.0
+# --tail-files 64``: 64 files dropped at once, applied 32 per micro-batch,
+# lookups beside) the seed drained 2.28 files/s on seed 1, ~0.44 s per
+# file, so the tail drops one file every 0.9 s.  One lookup thread sustains
+# ~100 retrieves/s (p50 ~10 ms on either table); it is offered 40/s.
+TAIL_FILE_INTERVAL_S = 0.9
+# Files one micro-batch may take: above the ~8-18 files that arrive while
+# one batch runs, so the cap never sets a batch's size in the open loop.
+TAIL_MAX_FILES_PER_TRIGGER = 32
+# The tail drops files for at least the window and until this many measured
+# micro-batches have committed; the files that arrived meanwhile make up one
+# more, draining batch.  So a run measures an idle-start batch of the first
+# few files, then a batch of everything that arrived while it ran.
+TAIL_OPEN_BATCHES = 1
+# Files prepared past the window: a batch takes up to ~25 s on this host.
+TAIL_SPARE_S = 25.0
 LOOKUPS_PER_S = 40.0
-BULK_LOOKUP_S = 3.0  # the bulk's lookup window, after its replays
+BULK_LOOKUP_S = 2.0  # the bulk's lookup window, after its replays
+BULK_WARM_REPLAYS = 1  # replays in the bulk's set-up, the cold one included
+BULK_MIN_REPLAYS = 3  # measured replays, however short the window
 # Delta files per bucket slot before the tail compacts that slot: low
 # enough that compaction runs inside one measured window.
 TAIL_AUTO_COMPACT_DELTAS = 2
@@ -133,7 +143,11 @@ def start_session(ctx: Context):
             "spark.ui.retainedStages": "100000",
             "spark.sql.ui.retainedExecutions": "100000",
         })
-    cores = len(os.sched_getaffinity(0))
+    # half the host's cores: a warm replay keeps ~2.3 cores busy at
+    # local[2] and at local[4] alike (the JVM's task threads plus a Python
+    # worker each, JIT and GC), and it is as fast at both; with every core
+    # taken by a task, one preempted core stalls each stage's last task
+    cores = max(1, len(os.sched_getaffinity(0)) // 2)
     spark = session.get_spark("perfbench", cores=cores, extra_conf=conf)
     with ctx.span("bench.prime"):
         ship_package(spark)
@@ -284,10 +298,14 @@ def run_bulk(ctx: Context, spark_box: dict) -> dict:
     t0 = time.perf_counter()
     with ctx.span("bench.setup"):
         spark = spark_box["spark"] = start_session(ctx)
-        # the cold replay pays JIT, codegen and the worker pool; the next
-        # one is still ~25% slower than steady state
-        replay_into(0)
-        replay_into(1)
+        # the cold replay pays JIT, codegen and the worker pool (~20 s);
+        # the replays after it still speed up by a few percent each, so
+        # every run measures the same, second to fourth, replays.  A traced
+        # run warms up two replays longer: its overhead compares traced
+        # with untraced replays, which the steep early speed-up would bias
+        warm = BULK_WARM_REPLAYS + (2 if ctx.tracer is not None else 0)
+        for i in range(warm):
+            replay_into(i)
     setup_s = time.perf_counter() - t0
 
     ctx.set_phase("measure")
@@ -295,10 +313,12 @@ def run_bulk(ctx: Context, spark_box: dict) -> dict:
     traced: list[bool] = []
     window = host.window_start()
     start = time.perf_counter()
-    while len(walls) < 2 or time.perf_counter() - start < ctx.seconds:
-        # traced runs alternate untraced and traced replays: the
-        # difference is the tracing overhead
-        on = ctx.tracer is not None and len(walls) % 2 == 1
+    while len(walls) < BULK_MIN_REPLAYS or (
+            time.perf_counter() - start < ctx.seconds):
+        # traced runs interleave traced and untraced replays as t u t:
+        # the difference is the tracing overhead, and the replays' warm-up
+        # speed-up falls evenly on both sides
+        on = ctx.tracer is not None and len(walls) % 2 == 0
         if ctx.tracer is not None and not on:
             with ctx.tracer.untraced():
                 walls.append(replay_into(len(tables)))
@@ -358,11 +378,15 @@ def _host_and_lookup_layers(ctx: Context, diag: dict,
 
 # ---------------------------------------------------------------- tail
 def run_tail(ctx: Context, spark_box: dict) -> dict:
+    from logicaldecoding_spark.oracle import replay_oracle
     from logicaldecoding_spark.table.format import LakeTable
 
     stream_mod = import_module("logicaldecoding_spark.streaming.stream_replay")
     interval = ctx.tail_interval_s
-    n_measured = ctx.tail_files or max(2, math.floor(ctx.seconds / interval))
+    # enough files for the window and the batches that may still be
+    # running when it closes
+    n_measured = ctx.tail_files or math.ceil(
+        (ctx.seconds + TAIL_SPARE_S) / interval)
     meta = inputs.prepare(ctx.cache, "tail", ctx.seed, ctx.scale, n_measured)
     # fresh copies of the split files, with increasing mtimes in file order
     # (the file source orders new files by modification time)
@@ -382,12 +406,20 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
     os.makedirs(watch)
     commits: list[tuple[float, int, int]] = []  # (time, watermark, epoch)
     applied = threading.Condition()
+    # set once the window has passed and TAIL_OPEN_BATCHES measured
+    # batches have committed: the drops stop there
+    closing = threading.Event()
+    window = [math.inf, math.inf]  # start, end
 
     def on_commit(_versions, epoch):
         lsn = LakeTable.load(table).applied_upto_lsn
+        now = time.perf_counter()
         with applied:
-            commits.append((time.perf_counter(), lsn, epoch))
+            commits.append((now, lsn, epoch))
             applied.notify_all()
+            measured = sum(t >= window[0] for t, _lsn, _e in commits)
+        if now >= window[1] and measured >= TAIL_OPEN_BATCHES:
+            closing.set()
 
     def wait_applied(lsn: int, query) -> bool:
         with applied:
@@ -411,6 +443,7 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
         query = stream_mod.stream_replay(
             spark, watch, table, os.path.join(ctx.work, "checkpoint"),
             parse_mode="proto", merge_mode="mor",
+            max_files_per_trigger=TAIL_MAX_FILES_PER_TRIGGER,
             auto_compact_deltas=TAIL_AUTO_COMPACT_DELTAS, on_commit=on_commit)
         spark_box["query"] = query
         warm_ok = wait_applied(last_lsn[n_warm - 1], query)
@@ -420,32 +453,37 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
 
     ctx.set_phase("measure")
     warm_batch = commits[-1][2] if commits else -1  # epoch == batch id
-    measured = files[n_warm:]
     # start on the trigger grid so the first batch's phase is fixed
     now = time.time()
     wait = (math.floor(now / TRIGGER_S) + 1) * TRIGGER_S + 0.25 - now
     start = time.perf_counter() + wait
-    due = [start + i * interval for i in range(len(measured))]
+    due_all = [start + i * interval for i in range(len(files) - n_warm)]
     dropped_at: list[float] = []
-    window = host.window_start()
+    host_window = host.window_start()
 
     def dropper():
-        for d, path in zip(due, measured):
-            pause = d - time.perf_counter()
-            if pause > 0:
-                time.sleep(pause)
+        # one file per interval until ``closing``; every batch after the
+        # first then takes what arrived while the one before it ran, and
+        # the number of batches does not hang on where the window's end
+        # falls against them
+        for d, path in zip(due_all, files[n_warm:]):
+            if closing.wait(max(0.0, d - time.perf_counter())):
+                break
             drop(path)
             dropped_at.append(time.perf_counter())
 
+    window[:] = [start, start + ctx.seconds]
     gen = threading.Thread(target=dropper, name="dropper")
     with LookupLoad(ctx, spark, meta["keys"], LOOKUPS_PER_S,
                     lambda: table) as lookups:
         gen.start()
         gen.join()
-        drained = wait_applied(last_lsn[-1], query)
+        n_dropped = len(dropped_at)
+        due = due_all[:n_dropped]
+        drained = wait_applied(last_lsn[n_warm + n_dropped - 1], query)
         end = time.perf_counter()
     measure_s = end - start
-    diag = host.window_stats(window)
+    diag = host.window_stats(host_window)
     # the draining batch posts its progress after on_commit returns
     while drained and ctx.remaining() > 0 and query.exception() is None and (
             (query.lastProgress or {}).get("batchId", -1) < commits[-1][2]):
@@ -465,11 +503,12 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
             lags.append(t_applied - d)
             last_applied = max(last_applied, t_applied)
     ctx.set_phase("check")
-    oracle = inputs.load_oracle(meta)
+    # the oracle of exactly the files the program was given
+    oracle, _schema = replay_oracle(watch)
     check_table(ctx, spark, table, oracle)
     check_lookups(ctx, spark, table, meta["keys"], oracle)
 
-    events = sum(meta["file_data_events"][n_warm:])
+    events = sum(meta["file_data_events"][n_warm:n_warm + n_dropped])
     batches = _measured_batches(progress, warm_batch)
     # the program's own apply time: foreachBatch wall of the measured
     # batches (the drop schedule and the trigger's idle ticks left out)
@@ -483,11 +522,11 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
         # bookkeeping's own share of the measured window
         ctx.layer["trace.overhead_frac"] = (
             ctx.tracer.overhead_s.get("measure", 0.0) / measure_s)
-        ctx.layer["table.bytes_written_per_event"] = (
-            _tree_bytes(table) / meta["data_events"])
+        ctx.layer["table.bytes_written_per_event"] = _tree_bytes(table) / sum(
+            meta["file_data_events"][:n_warm + n_dropped])
         _host_and_lookup_layers(ctx, diag, lookups)
         _stream_layers(ctx, progress, warm_batch, due, commits,
-                       last_lsn[n_warm:],
+                       last_lsn[n_warm:n_warm + n_dropped],
                        os.path.join(ctx.work, "checkpoint"))
     return {
         "replay_events_per_s": (events / add_batch_s
@@ -497,7 +536,8 @@ def run_tail(ctx: Context, spark_box: dict) -> dict:
         "tail_lag_p90_s": percentile(lags, 90),
         "lookup_p50_ms": percentile(lookups.latency_s, 50) * 1e3,
         "_diag": {"lags_s": lags, "measure_s": measure_s, "events": events,
-                  "add_batch_s": add_batch_s, "drain_s": drain_s,
+                  "files": n_dropped, "add_batch_s": add_batch_s,
+                  "drain_s": drain_s,
                   # with every file due at once: the sustained rate
                   "applied_files_per_s": len(lags) / drain_s if lags else 0.0,
                   "commits_s": [t - start for t, _lsn, _e in commits],
